@@ -39,6 +39,14 @@ Dataflow (delta = pages not yet in the committed extract):
 6. clusters: rebuilt for affected components only, unioned with the
    untouched remainder (broadcast anti-join).
 
+Partition width: each consumer of a delta-derived key set (band keys,
+content hashes, touched urls / cluster ids) builds it inline as a
+distinct over the delta. The frames the ingest caches for several
+consumers would keep the session's shuffle width (AQE does not coalesce
+a cached plan's output by default), so the call lets AQE coalesce them
+and restores the caller's setting on exit: O(delta) frames run O(delta)
+tasks however wide the session is.
+
 Equivalence contract (pinned by tests): clusters(full corpus) and
 clusters(base) + ingest(delta) produce the SAME partition of urls
 into clusters (pair sets may differ under the chain+star guard, the
@@ -81,7 +89,6 @@ def _touched_bucket_pairs(
     bands_old: DataFrame, bands_delta: DataFrame, key_cols: list[str],
     member_cols: list[str], cap: int,
     bc=F.broadcast,
-    delta_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Guarded bucket pair expansion restricted to buckets a delta row
     touches, emitting only pairs with >= 1 new side.
@@ -97,14 +104,8 @@ def _touched_bucket_pairs(
     new-touching pairs preserves every new member's connectivity (its
     chain/star edges all touch it), and old-old connectivity is
     already represented by the committed labels.
-
-    ``delta_keys`` lets the caller hand in a PRE-MATERIALIZED
-    (persisted) key set — run_incremental builds all its delta key
-    sets concurrently up front instead of serially inside each
-    consumer's first action (the r4 Amdahl-ceiling fix).
     """
-    if delta_keys is None:
-        delta_keys = bands_delta.select(*key_cols).distinct()
+    delta_keys = bands_delta.select(*key_cols).distinct()
     old_touched = bands_old.join(bc(delta_keys), key_cols, "left_semi")
     members = old_touched.withColumn("is_new", F.lit(False)).unionByName(
         bands_delta.withColumn("is_new", F.lit(True))
@@ -136,23 +137,33 @@ def run_incremental(
     ``run_dedup`` (or a prior ``run_incremental``). Returns the same
     PipelineResult shape with updated full tables.
 
-    Every frame the ingest persists (key-set prep, affected-only
-    label/cluster views) is released in a ``finally`` — a failed run
-    (commit conflict from a concurrent writer, a failed stage action)
-    must not leak pinned executor storage into the caller's session
-    for every retry."""
+    Every frame the ingest persists (affected-only label/cluster
+    views) is released, and the caller's cached-plan setting restored,
+    in a ``finally`` — a failed run (commit conflict from a concurrent
+    writer, a failed stage action) must not leak pinned executor
+    storage or session state into the caller's session for every
+    retry."""
+    # cached O(delta) frames otherwise keep the session shuffle width
+    # (AQE may not coalesce a cached plan). A 93-page ingest at 128
+    # shuffle partitions, local[4]: 205 tasks per call with it, 1,992
+    # without
+    cached_key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    prior_cached = spark.conf.get(cached_key)
+    spark.conf.set(cached_key, "true")
     pinned: list[DataFrame] = []
     try:
         return _run_incremental_impl(
             spark, new_pages, store, cfg, use_extracted, lcs_check, pinned
         )
     finally:
+        # guarded: a dead context (executor OOM, dropped gateway) must
+        # not raise here and MASK the root-cause exception the caller
+        # needs, nor skip the remaining frames
         for df in pinned:
-            # guarded: a dead context (executor OOM, dropped gateway)
-            # must not raise here and MASK the root-cause exception the
-            # caller needs, nor skip the remaining frames
             with contextlib.suppress(Exception):
                 df.unpersist()
+        with contextlib.suppress(Exception):
+            spark.conf.set(cached_key, prior_cached)
 
 
 def _run_incremental_impl(
@@ -207,7 +218,9 @@ def _run_incremental_impl(
         return m is not None and m.get("for_extract_snapshot") == ref_snap
 
     prior_ex = store.latest("extract")
-    if docs_delta.isEmpty():
+    # extract maps rows 1:1, so the raw delta answers "anything new?"
+    # without running the extract pass the append below runs anyway
+    if delta_pages.isEmpty():
         # "clusters" commits LAST — it being fresh means the whole
         # ingest completed (labels alone fresh still needs a redo)
         if _fresh("clusters", prior_ex["snapshot"]):
@@ -284,8 +297,7 @@ def _run_incremental_impl(
     )
     sigs_all = store.read(spark, "signatures")
 
-    # shared band projections (used by the prep block below and the
-    # candidate builders)
+    # shared band projections (used by the candidate builders)
     from epstein_pipeline_spark.functions.simhash import (
         hamming_distance_expr,
         simhash_bands_expr,
@@ -301,46 +313,6 @@ def _run_incremental_impl(
             ).alias("band_i", "band_val"),
         )
 
-    # DELTA KEY-SET PREP (r4 verdict "Amdahl ceiling" fix): the three
-    # delta-derived key sets — MinHash band keys, SimHash band keys,
-    # content hashes — each feed a broadcast semi-join downstream.
-    # Left alone, each broadcast builds SERIALLY on the driver inside
-    # its consumer's first action (scan + distinct + collect per set,
-    # back to back), a cost that is flat in delta size and becomes the
-    # ingest job's Amdahl ceiling on a many-executor cluster. Here the
-    # sets are persisted and materialized CONCURRENTLY in one up-front
-    # step (Spark schedules jobs from multiple driver threads onto the
-    # same executor pool), so the serial tail collapses to ~max
-    # instead of sum, and each consumer's broadcast build is a scan of
-    # a cached table. Only sets whose consumer stage is stale for this
-    # delta are built (a crash-recovered stage skips its prep), and
-    # only on the broadcast path (a backfill-sized delta shuffles —
-    # persisting corpus-scale key sets would just spill).
-    prepped: dict[str, DataFrame] = {}
-    if small_delta:
-        to_prep: dict[str, DataFrame] = {}
-        if not _fresh("minhash_candidates", ref_snap):
-            to_prep["mh_keys"] = (
-                band_rows(mh_delta, cfg).select("band_i", "band_hash").distinct()
-            )
-        if not _fresh("pairs", ref_snap):
-            to_prep["sh_keys"] = (
-                sh_bands(sigs_delta).select("band_i", "band_val").distinct()
-            )
-            to_prep["hashes"] = docs_delta.select("content_hash").distinct()
-        if to_prep:
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _materialize(item):
-                name, df = item
-                df = df.persist()
-                pinned.append(df)
-                df.count()
-                return name, df
-
-            with ThreadPoolExecutor(len(to_prep)) as ex:
-                prepped = dict(ex.map(_materialize, to_prep.items()))
-
     # 3. exact pass: delta-internal star pairs + delta -> old-anchor
     def build_exact() -> DataFrame:
         from epstein_pipeline_spark.operators.exact import exact_pairs
@@ -351,11 +323,7 @@ def _run_incremental_impl(
         # instead of shuffling the whole committed corpus by
         # content_hash on every ingest — the same pattern as the
         # band-key semi-join in _touched_bucket_pairs
-        delta_hashes = (
-            prepped.get("hashes")
-            if prepped.get("hashes") is not None
-            else docs_delta.select("content_hash").distinct()
-        )
+        delta_hashes = docs_delta.select("content_hash").distinct()
         old_anchor = (
             old_docs.join(bc(delta_hashes), "content_hash", "left_semi")
             .groupBy("content_hash")
@@ -388,7 +356,6 @@ def _run_incremental_impl(
         pairs = _touched_bucket_pairs(
             band_rows(mh_old, cfg), band_rows(mh_delta, cfg),
             ["band_i", "band_hash"], ["url"], cfg.band_bucket_cap, bc=bc,
-            delta_keys=prepped.get("mh_keys"),
         ).select(
             F.col("p.a.url").alias("url1"), F.col("p.b.url").alias("url2")
         ).dropDuplicates(["url1", "url2"])
@@ -411,14 +378,12 @@ def _run_incremental_impl(
     )
 
     # 5. SimHash pass: same touched-bucket pattern, signatures ride in
-    # the member structs (no join back); sh_bands + the simhash
-    # imports moved up beside the key-set prep block
+    # the member structs (no join back)
     def build_simhash() -> DataFrame:
         pairs = _touched_bucket_pairs(
             sh_bands(old_sigs), sh_bands(sigs_delta),
             ["band_i", "band_val"], ["url", "simhash"], cfg.band_bucket_cap,
             bc=bc,
-            delta_keys=prepped.get("sh_keys"),
         )
         d = hamming_distance_expr(F.col("p.a.simhash"), F.col("p.b.simhash"))
         return (
@@ -467,8 +432,7 @@ def _run_incremental_impl(
     # persist the affected-only frames: each is consumed by MULTIPLE
     # downstream broadcast sites (relabel semi, untouched anti,
     # clusters keep anti), and without the persist every site's
-    # broadcast build re-runs the O(labels) semi-join scan serially —
-    # the same flat driver-side cost the key-set prep removes upstream
+    # broadcast build re-runs the O(labels) semi-join scan serially
     touched = old_labels.join(bc(edge_urls), "url", "left_semi").persist()
     pinned.append(touched)
     # seed edge (member -> its old cluster_id): label space == node

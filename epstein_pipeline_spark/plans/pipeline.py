@@ -4,7 +4,7 @@ cli.py:556-636, restated per SURVEY.md §3.1).
 
 Stages (each a committed checkpoint, resumable):
 
-    extract    pages(html) -> text (JVM regex chain), normalize, hash
+    extract    pages(html) -> text, normalize, hash (one Arrow pass)
     exact      hash-group star pairs
     minhash    signatures -> LSH band join -> Jaccard verify
     simhash    64-bit signatures -> Hamming band join -> verify

@@ -562,3 +562,72 @@ def test_compact_extract_refuses_pending_ingest(spark, tmp_path):
     assert len(ms.get("paths", [ms["path"]])) == 1
     m = store.compact(spark, "extract")
     assert len(m.get("paths", [m["path"]])) == 1
+
+
+def test_ingest_cached_frames_run_at_delta_width(spark, pages, tmp_path):
+    """AQE may not coalesce a cached plan's output partitions unless
+    the ingest allows it, so every frame the ingest persists would
+    freeze at the session shuffle width and each count, broadcast
+    build and join over it would launch that many tasks. At a width of
+    64 (far above what a 100-page delta needs) no Spark stage of the
+    ingest may reach it, and the partition contract must still hold."""
+    key = "spark.sql.shuffle.partitions"
+    width = 64
+    sc = spark.sparkContext
+    is_delta = F.pmod(F.xxhash64("url"), F.lit(4)) == 0
+    cfg = DedupConfig()
+    full = run_dedup(spark, pages, StageStore(tmp_path / "full"), cfg)
+    store = StageStore(tmp_path / "inc")
+    run_dedup(spark, pages.filter(~is_delta), store, cfg)
+
+    prior = spark.conf.get(key)
+    spark.conf.set(key, str(width))
+    group = "ingest-width"
+    try:
+        sc.setJobGroup(group, "incremental ingest at a wide session")
+        inc = run_incremental(spark, pages.filter(is_delta), store, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set(key, prior)
+
+    tracker = sc.statusTracker()
+    widths = [
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    ]
+    assert widths, "no Spark stage recorded under the ingest's job group"
+    assert max(widths) < width, sorted(widths)[-10:]
+    assert _partition(full.labels) == _partition(inc.labels)
+    assert _cluster_partition(full.clusters) == _cluster_partition(inc.clusters)
+
+
+def test_ingest_restores_cached_plan_partitioning_setting(spark, tmp_path):
+    """The ingest widens AQE's reach over cached plans only for its
+    own duration: the caller's value is back after a normal return and
+    after a failure (a store with no committed extract)."""
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    prior = spark.conf.get(key)
+
+    def pages_of(rows, ts):
+        return spark.createDataFrame(rows, "url string, text string").select(
+            "url", F.lit(ts).cast("timestamp").alias("warc_ts"),
+            F.lit("en").alias("lang"), "text",
+        )
+
+    t1 = " ".join(f"w{i}" for i in range(120))
+    store = StageStore(tmp_path / "s")
+    base = pages_of([("u1", t1), ("u2", t1 + " tail")], "2024-01-01 00:00:00")
+    run_dedup(spark, base, store, DedupConfig(), use_extracted=False)
+    delta = pages_of([("z1", t1 + " z")], "2024-01-02 00:00:00")
+
+    run_incremental(spark, delta, store, DedupConfig(), use_extracted=False)
+    assert spark.conf.get(key) == prior
+
+    with pytest.raises(FileNotFoundError):
+        run_incremental(
+            spark, delta, StageStore(tmp_path / "empty"), DedupConfig(),
+            use_extracted=False,
+        )
+    assert spark.conf.get(key) == prior
